@@ -95,25 +95,28 @@ def _shuffle_partitions(df: DataFrame) -> int:
 
 
 def advance_corr_machines(
-    spec: dict, a_state: dict, t_state: dict, sid, t: int, a_key, t_key
+    spec: dict, a_state: dict, t_state: dict, t: int, a_key, t_key
 ) -> tuple[bool, bool]:
-    """Advance the after/threshold state machines for ONE event of
-    ``sid`` at epoch-second ``t`` and return (suppressed_after,
+    """Advance the after/threshold state machines for ONE event at
+    epoch-second ``t`` and return (suppressed_after,
     suppressed_threshold) — the exact reference semantics
     (after.c:51-229, threshold.c:54-234; after gates threshold updates,
-    engine.c:1377-1389).  Shared by the apply_after_threshold replay and
-    the chain walk (a chain rule's counters run inside the walk because
-    its verdict-gated set is suppressed by the same machine instance
-    that gates the alert, engine.c:1402-1427)."""
+    engine.c:1377-1389).
+
+    ``a_key``/``t_key`` are the state keys the caller owns: the batch
+    replay and the chain walks key by ``(sid, track)`` like the
+    reference's (hash, sid) slots (after.c:108-110, threshold.c:111-113);
+    the streaming replays hold one rule's state per group and key by the
+    track string alone.  The only after/threshold transition in the
+    package: batch, chain walk and both streaming replays call it."""
     suppressed = False
     sup_thr = False
     after_spec = spec["after"]
     if after_spec is not None:
         a_count, a_secs = after_spec
-        k = (sid, a_key)
-        st = a_state.get(k)
+        st = a_state.get(a_key)
         if st is None:
-            a_state[k] = [1, t]
+            a_state[a_key] = [1, t]
             suppressed = True  # after.c:78 default true until count > N
         else:
             st[0] += 1
@@ -130,10 +133,9 @@ def advance_corr_machines(
     thr_spec = spec["threshold"]
     if thr_spec is not None and not suppressed:  # engine.c:1386 gate
         ttype, t_count, t_secs = thr_spec
-        k = (sid, t_key)
-        st = t_state.get(k)
+        st = t_state.get(t_key)
         if st is None:
-            t_state[k] = [1, t]
+            t_state[t_key] = [1, t]
         else:
             st[0] += 1
             oldtime = t - st[1]
@@ -144,6 +146,23 @@ def advance_corr_machines(
             if t_count < st[0]:  # (threshold.c:148-150)
                 sup_thr = True
     return suppressed, sup_thr
+
+
+def max_corr_secs(specs: dict[int, dict]) -> int:
+    """Longest after/threshold window across ``specs`` (0 when empty):
+    a key silent longer than this gap-resets on its next event
+    (after.c:132-137, threshold.c:141-146), so its counters are
+    indistinguishable from fresh state and may be evicted."""
+    return max(
+        (
+            max(
+                v["after"][1] if v["after"] else 0,
+                v["threshold"][2] if v["threshold"] else 0,
+            )
+            for v in specs.values()
+        ),
+        default=0,
+    )
 
 
 def corr_group_key(specs: dict[int, dict]) -> F.Column:
@@ -256,7 +275,7 @@ def apply_after_threshold(
                 if spec is None:
                     continue
                 suppressed, sup_thr = advance_corr_machines(
-                    spec, a_state, t_state, sid, int(ts[i]), a_keys[i], t_keys[i]
+                    spec, a_state, t_state, int(ts[i]), (sid, a_keys[i]), (sid, t_keys[i])
                 )
                 if suppressed or sup_thr:
                     out_key.append(keys[i])
@@ -343,6 +362,13 @@ def flex_shape(track: str) -> str | None:
     return track[len("flex_"):] if track.startswith("flex_") and track != "flex_auto" else None
 
 
+def is_flexbit(track: str) -> bool:
+    """A flexbit (flat tuple store) rather than a plain xbit: either a
+    fixed direction shape or ``flex_auto`` (shape decided by the
+    conditions that probe the bit)."""
+    return track == "flex_auto" or flex_shape(track) is not None
+
+
 def flex_set_key(shape: str) -> F.Column:
     return _FLEX_SHAPES[shape][0]()
 
@@ -369,6 +395,98 @@ def _flex_tuple_match(shape: str, stored: tuple, esrc, edst, euser) -> bool:
     if shape == "username":
         return suser == euser
     return False
+
+
+#: verdict-gated set/unset kinds of chain rules: the walk applies
+#: ``kind[1:]`` through bit_store_step only when the rule's own
+#: condition verdict held and its after/threshold machines allowed it
+CHAIN_KINDS = frozenset({"cset", "cunset", "cfset", "cfunset"})
+
+
+def bit_store_step(
+    state: dict, fstate: dict, kind: str, name, key, ts: float, expire, shape, tup
+) -> bool | None:
+    """Apply ONE xbit/flexbit store event in replay order; the only
+    bit-store transition in the package (batch walk, stage-B chain and
+    funnel walks).  Returns whether the bit is active for a
+    ``check``/``fcheck``, None for the mutating kinds.
+
+    ``state``: plain xbits, (name, key) -> (set_ts, expire)
+    (src/xbit-mmap.c:181-264).  ``fstate``: flexbits, name ->
+    {(src, dst, user): (set_ts, expire)} — the reference's flat tuple
+    store, whose unset clears and whose check probes every stored tuple
+    matching the event ``tup`` per ``shape`` (src/flexbit-mmap.c:106-258,
+    :973-1100).  Expire 0 is permanent."""
+    if kind == "set":
+        state[(name, key)] = (ts, expire)
+    elif kind == "unset":
+        state.pop((name, key), None)
+    elif kind == "check":
+        st = state.get((name, key))
+        return st is not None and bool(st[1] == 0 or (ts - st[0]) < st[1])
+    elif kind == "fset":
+        fstate.setdefault(name, {})[tup] = (ts, expire)
+    elif kind == "funset":
+        store = fstate.get(name)
+        if store:
+            for stored in [t for t in store if _flex_tuple_match(shape, t, *tup)]:
+                del store[stored]
+    elif kind == "fcheck":
+        return any(
+            (exp == 0 or (ts - set_ts) < exp) and _flex_tuple_match(shape, t, *tup)
+            for t, (set_ts, exp) in fstate.get(name, {}).items()
+        )
+    else:
+        raise ValueError(f"unknown bit-store event kind {kind!r}")
+    return None
+
+
+def _cond_shapes_by_bit(rules: list[RuleIR]) -> dict[str, set]:
+    """Flexbit name -> direction shapes its isset/isnotset conditions
+    probe.  A SET records (src, dst, username); the keyed store keeps
+    one copy per (bit, shape), namespaced "name#shape"."""
+    out: dict[str, set] = {}
+    for r in rules:
+        for x in r.xbits:
+            s = flex_shape(x.track)
+            if x.action in ("isset", "isnotset") and s is not None:
+                out.setdefault(x.name, set()).add(s)
+    return out
+
+
+def _funnel_bits(rules: list[RuleIR]) -> set[str]:
+    """Flexbit names that take the FUNNEL (flat tuple store) path: bits
+    carrying an UNSET — the reference clears matching tuples across ALL
+    shapes (flexbit-mmap.c:973-1100) — plus every flexbit a CHAIN rule
+    touches (its verdict-gated sets and the checks that observe them
+    replay in one ordered pass, so all access uses one storage form)."""
+    chain_rules, _ = chain_components(rules)
+    chain_sids = {r.sid for r in chain_rules}
+    return {
+        x.name
+        for r in rules
+        for x in r.xbits
+        if is_flexbit(x.track) and (x.action == "unset" or r.sid in chain_sids)
+    }
+
+
+def _set_variants(x, shapes_by_bit: dict[str, set]) -> list[tuple[str, F.Column]]:
+    """(bit_name, key expression) copies a keyed (non-funnel) set/unset
+    writes: one per plain xbit; one per condition-probed shape for a
+    flexbit (its own shape when the set fixes one)."""
+    if not is_flexbit(x.track):
+        return [(x.name, xbit_key_expr(x.track))]
+    own = flex_shape(x.track)
+    shapes = [own] if own else sorted(shapes_by_bit.get(x.name, ()))
+    return [(f"{x.name}#{s}", flex_set_key(s)) for s in shapes]
+
+
+def _check_variant(x) -> tuple[str, F.Column]:
+    """(bit_name, key expression) a keyed (non-funnel) condition probes."""
+    s = flex_shape(x.track)
+    if s is not None:
+        return f"{x.name}#{s}", flex_check_key(s)
+    return x.name, xbit_key_expr(x.track)
 
 
 def chain_components(rules: list[RuleIR]) -> tuple[list[RuleIR], dict[str, str]]:
@@ -477,107 +595,62 @@ def apply_xbits(
             F.col("track_threshold").alias("t_key"),
         ]
 
-    # flexbit SETs record (src, dst, username); which key shapes the
-    # store needs is decided by the CONDITIONS that probe the bit — one
-    # keyed copy per (bit, shape), namespaced "name#shape"
-    shapes_by_bit: dict[str, set] = {}
-    for r in cond_rules:
-        for x in r.xbits:
-            s = flex_shape(x.track)
-            if x.action in ("isset", "isnotset") and s is not None:
-                shapes_by_bit.setdefault(x.name, set()).add(s)
-
-    # flexbit names with at least one unset -> exact funnel path
-    funnel_bits = {
-        x.name
-        for r in set_rules
-        for x in r.xbits
-        if x.action == "unset"
-        and (x.track == "flex_auto" or flex_shape(x.track) is not None)
-    }
-    # every flexbit a CHAIN rule touches funnels too: its verdict-gated
-    # set and the checks that observe it must replay in one ordered
-    # pass over the flat tuple store (and ALL access to the bit must
-    # use the same storage form)
-    funnel_bits |= {
-        x.name
-        for r in chain_rules
-        for x in r.xbits
-        if x.track == "flex_auto" or flex_shape(x.track) is not None
-    }
+    shapes_by_bit = _cond_shapes_by_bit(rules)
+    funnel_bits = _funnel_bits(rules)
 
     _null_s = F.lit(None).cast("string")
+    hit_id_col = F.concat_ws("#", F.col("event_key"), F.col("sid").cast("string"))
 
-    def _tuple_cols():
-        return [
-            F.col("src_ip").alias("e_src"),
-            F.col("dst_ip").alias("e_dst"),
-            F.coalesce(F.col("username"), F.lit("")).alias("e_user"),
-        ]
+    def _event(df, r, x, bit_name, key, kind, *, tuple_cols, chain=False):
+        """One walk-event branch: rule ``r``'s rows of ``df`` as ``kind``
+        events of its xbit ``x`` on ``bit_name``/``key``.  Within one
+        event, rules replay in position order and a rule's own check
+        (seq 2p) precedes its set (2p+1) — engine.c:999-1024 vs
+        1415-1427.  Checks and chain sets carry a hit_id (verdict
+        join, chain gating); ``tuple_cols`` events carry the event's
+        (src, dst, user) tuple and the bit's direction shape."""
+        check = x.action in ("isset", "isnotset")
+        tup = (
+            [
+                F.col("src_ip").alias("e_src"),
+                F.col("dst_ip").alias("e_dst"),
+                F.coalesce(F.col("username"), F.lit("")).alias("e_user"),
+            ]
+            if tuple_cols
+            else [_null_s.alias("e_src"), _null_s.alias("e_dst"), _null_s.alias("e_user")]
+        )
+        return df.filter(F.col("sid") == r.sid).select(
+            F.lit(bit_name).alias("bit_name"),
+            key.alias("bit_key"),
+            ts_seconds_d(F.col("ts")).alias("ts_d"),
+            F.col("event_key"),
+            F.lit(r.position * 2 + (0 if check else 1)).alias("seq"),
+            F.lit(kind).alias("kind"),
+            F.lit(0 if check else x.expire).alias("expire"),
+            (hit_id_col if check or chain else _null_s).alias("hit_id"),
+            F.lit(x.action == "isset").alias("want_set"),
+            F.lit((flex_shape(x.track) or "") if tuple_cols else "").alias("shape"),
+            *tup,
+            *(_corr_cols_for(r) if chain else _corr_cols_null()),
+        )
 
-    def _no_tuple_cols():
-        return [
-            _null_s.alias("e_src"),
-            _null_s.alias("e_dst"),
-            _null_s.alias("e_user"),
-        ]
-
-    # build set/unset event stream from surviving setter alerts
     spark_events = []
+    # plain set/unset events come from alerts that survived
+    # after/threshold (engine.c:1415-1427)
     src = survived if survived is not None else hits
 
     # chain rules: set/unset events come from their CANDIDATE hits (the
     # walk gates them on the rule's own check verdict, recorded earlier
-    # in the same ordered pass — seq 2p checks before 2p+1 sets)
+    # in the same ordered pass); a chain FLEXBIT set/unset goes into
+    # the component funnel's flat store
     for r in chain_rules:
         for x in r.xbits:
             if x.action not in ("set", "unset"):
                 continue
-            is_flex = x.track == "flex_auto" or flex_shape(x.track) is not None
-            if is_flex:
-                # verdict-gated FLEXBIT set/unset: tuple-carrying event
-                # into the component funnel's flat store
-                ev = (
-                    hits.filter(F.col("sid") == r.sid)
-                    .select(
-                        F.lit(x.name).alias("bit_name"),
-                        F.lit("").alias("bit_key"),
-                        ts_seconds_d(F.col("ts")).alias("ts_d"),
-                        F.col("event_key"),
-                        F.lit(r.position * 2 + 1).alias("seq"),
-                        F.lit("cf" + x.action).alias("kind"),
-                        F.lit(x.expire).alias("expire"),
-                        F.concat_ws(
-                            "#", F.col("event_key"), F.col("sid").cast("string")
-                        ).alias("hit_id"),
-                        F.lit(False).alias("want_set"),
-                        F.lit(flex_shape(x.track) or "").alias("shape"),
-                        *_tuple_cols(),
-                        *_corr_cols_for(r),
-                    )
-                )
-                spark_events.append(ev)
-                continue
-            ev = (
-                hits.filter(F.col("sid") == r.sid)
-                .select(
-                    F.lit(x.name).alias("bit_name"),
-                    xbit_key_expr(x.track).alias("bit_key"),
-                    ts_seconds_d(F.col("ts")).alias("ts_d"),
-                    F.col("event_key"),
-                    F.lit(r.position * 2 + 1).alias("seq"),
-                    F.lit("c" + x.action).alias("kind"),
-                    F.lit(x.expire).alias("expire"),
-                    F.concat_ws(
-                        "#", F.col("event_key"), F.col("sid").cast("string")
-                    ).alias("hit_id"),
-                    F.lit(False).alias("want_set"),
-                    F.lit("").alias("shape"),
-                    *_no_tuple_cols(),
-                    *_corr_cols_for(r),
-                )
-            )
-            spark_events.append(ev)
+            flex = is_flexbit(x.track)
+            key = F.lit("") if flex else xbit_key_expr(x.track)
+            kind = ("cf" if flex else "c") + x.action
+            spark_events.append(_event(hits, r, x, x.name, key, kind, tuple_cols=flex, chain=True))
 
     for r in set_rules:
         if r.sid in chain_sids:
@@ -585,106 +658,22 @@ def apply_xbits(
         for x in r.xbits:
             if x.action not in ("set", "unset"):
                 continue
-            is_flex = x.track == "flex_auto" or flex_shape(x.track) is not None
-            if is_flex and x.name in funnel_bits:
-                # funnel: one tuple-carrying event, colocated per bit name
-                kind = "fset" if x.action == "set" else "funset"
-                shape = flex_shape(x.track) or ""
-                ev = (
-                    src.filter(F.col("sid") == r.sid)
-                    .select(
-                        F.lit(x.name).alias("bit_name"),
-                        F.lit("").alias("bit_key"),
-                        ts_seconds_d(F.col("ts")).alias("ts_d"),
-                        F.col("event_key"),
-                        F.lit(r.position * 2 + 1).alias("seq"),
-                        F.lit(kind).alias("kind"),
-                        F.lit(x.expire).alias("expire"),
-                        _null_s.alias("hit_id"),
-                        F.lit(False).alias("want_set"),
-                        F.lit(shape).alias("shape"),
-                        *_tuple_cols(),
-                        *_corr_cols_null(),
-                    )
-                )
-                spark_events.append(ev)
-                continue
-            if is_flex:
-                own = flex_shape(x.track)
-                shapes = [own] if own else sorted(shapes_by_bit.get(x.name, ()))
-                variants = [(f"{x.name}#{s}", flex_set_key(s)) for s in shapes]
-            else:
-                variants = [(x.name, xbit_key_expr(x.track))]
+            # funnel: one tuple-carrying event, colocated per bit name
+            funnel = is_flexbit(x.track) and x.name in funnel_bits
+            variants = [(x.name, F.lit(""))] if funnel else _set_variants(x, shapes_by_bit)
+            kind = ("f" if funnel else "") + x.action
             for bit_name, key in variants:
-                ev = (
-                    src.filter(F.col("sid") == r.sid)
-                    .select(
-                        F.lit(bit_name).alias("bit_name"),
-                        key.alias("bit_key"),
-                        ts_seconds_d(F.col("ts")).alias("ts_d"),
-                        F.col("event_key"),
-                        # within one event: rule order, a rule's own check
-                        # precedes its set (engine.c:999-1024 vs 1415-1427)
-                        F.lit(r.position * 2 + 1).alias("seq"),
-                        F.lit(x.action).alias("kind"),
-                        F.lit(x.expire).alias("expire"),
-                        _null_s.alias("hit_id"),
-                        F.lit(False).alias("want_set"),
-                        F.lit("").alias("shape"),
-                        *_no_tuple_cols(),
-                        *_corr_cols_null(),
-                    )
-                )
-                spark_events.append(ev)
+                spark_events.append(_event(src, r, x, bit_name, key, kind, tuple_cols=funnel))
 
     # explode condition entries of candidate hits
     for r in cond_rules:
         for x in r.xbits:
             if x.action not in ("isset", "isnotset"):
                 continue
-            s = flex_shape(x.track)
-            if s is not None and x.name in funnel_bits:
-                ev = (
-                    hits.filter(F.col("sid") == r.sid)
-                    .select(
-                        F.lit(x.name).alias("bit_name"),
-                        F.lit("").alias("bit_key"),
-                        ts_seconds_d(F.col("ts")).alias("ts_d"),
-                        F.col("event_key"),
-                        F.lit(r.position * 2).alias("seq"),
-                        F.lit("fcheck").alias("kind"),
-                        F.lit(0).alias("expire"),
-                        F.concat_ws("#", F.col("event_key"), F.col("sid").cast("string")).alias("hit_id"),
-                        F.lit(x.action == "isset").alias("want_set"),
-                        F.lit(s).alias("shape"),
-                        *_tuple_cols(),
-                        *_corr_cols_null(),
-                    )
-                )
-                spark_events.append(ev)
-                continue
-            if s is not None:
-                bit_name, key = f"{x.name}#{s}", flex_check_key(s)
-            else:
-                bit_name, key = x.name, xbit_key_expr(x.track)
-            ev = (
-                hits.filter(F.col("sid") == r.sid)
-                .select(
-                    F.lit(bit_name).alias("bit_name"),
-                    key.alias("bit_key"),
-                    ts_seconds_d(F.col("ts")).alias("ts_d"),
-                    F.col("event_key"),
-                    F.lit(r.position * 2).alias("seq"),
-                    F.lit("check").alias("kind"),
-                    F.lit(0).alias("expire"),
-                    F.concat_ws("#", F.col("event_key"), F.col("sid").cast("string")).alias("hit_id"),
-                    F.lit(x.action == "isset").alias("want_set"),
-                    F.lit("").alias("shape"),
-                    *_no_tuple_cols(),
-                    *_corr_cols_null(),
-                )
-            )
-            spark_events.append(ev)
+            funnel = flex_shape(x.track) is not None and x.name in funnel_bits
+            bit_name, key = (x.name, F.lit("")) if funnel else _check_variant(x)
+            kind = "fcheck" if funnel else "check"
+            spark_events.append(_event(hits, r, x, bit_name, key, kind, tuple_cols=funnel))
 
     if not spark_events:
         return hits.withColumn("xbit_ok", F.lit(True))
@@ -759,14 +748,9 @@ def apply_xbits(
                     spec = chain_corr_specs.get(int(cs))
                     if spec is None:
                         return True
+                    cs = int(cs)
                     fl = advance_corr_machines(
-                        spec,
-                        a_state,
-                        t_state,
-                        int(cs),
-                        int(ts_d),
-                        a_keys[i],
-                        t_keys[i],
+                        spec, a_state, t_state, int(ts_d), (cs, a_keys[i]), (cs, t_keys[i])
                     )
                     corr_flags[hit_id] = fl
                     out_ids.append(hit_id)
@@ -776,74 +760,26 @@ def apply_xbits(
                 return not (fl[0] or fl[1])
 
             for i, name, key, ts_d, kind, expire, hit_id, want_set, shape, esrc, edst, euser in it:
-                if kind == "set":
-                    state[(name, key)] = (ts_d, expire)
-                elif kind == "unset":
-                    state.pop((name, key), None)
-                elif kind == "cset":
-                    if ver.get(hit_id, False) and _corr_gate(i, hit_id, ts_d):
-                        state[(name, key)] = (ts_d, expire)
-                elif kind == "cunset":
-                    if ver.get(hit_id, False) and _corr_gate(i, hit_id, ts_d):
-                        state.pop((name, key), None)
-                elif kind == "check":
-                    st = state.get((name, key))
-                    active = st is not None and (
-                        st[1] == 0 or (ts_d - st[0]) < st[1]
-                    )
-                    ok = bool(active) == bool(want_set)
-                    ver[hit_id] = ver.get(hit_id, True) and ok
-                    out_ids.append(hit_id)
-                    out_ok.append(ok)
-                    out_sa.append(None)
-                    out_st.append(None)
-                elif kind == "fset":
-                    fstate.setdefault(name, {})[(esrc, edst, euser)] = (ts_d, expire)
-                elif kind == "funset":
-                    store = fstate.get(name)
-                    if store:
-                        dead = [
-                            tup
-                            for tup in store
-                            if _flex_tuple_match(shape, tup, esrc, edst, euser)
-                        ]
-                        for tup in dead:
-                            del store[tup]
-                elif kind == "cfset":
-                    # flexbit chain set: fires only when the rule's own
-                    # condition verdict held (engine.c:1415-1427) AND
-                    # its after/threshold machines allowed the event
-                    if ver.get(hit_id, False) and _corr_gate(i, hit_id, ts_d):
-                        fstate.setdefault(name, {})[(esrc, edst, euser)] = (
-                            ts_d,
-                            expire,
-                        )
-                elif kind == "cfunset":
-                    if ver.get(hit_id, False) and _corr_gate(i, hit_id, ts_d):
-                        store = fstate.get(name)
-                        if store:
-                            dead = [
-                                tup
-                                for tup in store
-                                if _flex_tuple_match(shape, tup, esrc, edst, euser)
-                            ]
-                            for tup in dead:
-                                del store[tup]
-                else:  # fcheck
-                    store = fstate.get(name, {})
-                    active = any(
-                        (exp == 0 or (ts_d - set_ts) < exp)
-                        and _flex_tuple_match(shape, tup, esrc, edst, euser)
-                        for tup, (set_ts, exp) in store.items()
-                    )
-                    ok = bool(active) == bool(want_set)
-                    # chain gating: a rule's own flexbit check verdict
-                    # gates its set later in the same ordered pass
-                    ver[hit_id] = ver.get(hit_id, True) and ok
-                    out_ids.append(hit_id)
-                    out_ok.append(ok)
-                    out_sa.append(None)
-                    out_st.append(None)
+                if kind in CHAIN_KINDS:
+                    # chain set/unset: fires only when the rule's own
+                    # condition verdict held (engine.c:1415-1427) AND its
+                    # after/threshold machines allowed the event
+                    if not (ver.get(hit_id, False) and _corr_gate(i, hit_id, ts_d)):
+                        continue
+                    kind = kind[1:]
+                active = bit_store_step(
+                    state, fstate, kind, name, key, ts_d, expire, shape, (esrc, edst, euser)
+                )
+                if active is None:
+                    continue
+                ok = active == bool(want_set)
+                # chain gating: a rule's own check verdict gates its set
+                # later in the same ordered pass
+                ver[hit_id] = ver.get(hit_id, True) and ok
+                out_ids.append(hit_id)
+                out_ok.append(ok)
+                out_sa.append(None)
+                out_st.append(None)
             out = {"hit_id": out_ids, "ok": pd.array(out_ok, dtype="boolean")}
             if has_chain_corr:
                 out["suppressed_after"] = pd.array(out_sa, dtype="boolean")
@@ -896,9 +832,7 @@ def apply_xbits(
     else:
         agg = verdicts.withColumnRenamed("ok", "xbit_ok")
 
-    hits_with_id = hits.withColumn(
-        "hit_id", F.concat_ws("#", F.col("event_key"), F.col("sid").cast("string"))
-    )
+    hits_with_id = hits.withColumn("hit_id", hit_id_col)
     cond_sids = [r.sid for r in cond_rules]
     # verdict set scales with the alert volume — regular (shuffle) join,
     # not broadcast; AQE picks broadcast when it is actually small

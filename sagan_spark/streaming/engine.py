@@ -3,39 +3,45 @@
 The reference is a pure streaming engine — FIFO input, worker pool,
 mmap'd correlation state that survives restarts because it is a file
 (reference src/input-plugins/fifo.c:62, src/sagan-defs.h:185-208,
-src/ipc.c).  The Spark form (north_rule: "Structured Streaming stateful
-counters keyed by (rule_sid, track field) with event-time watermarks"):
+src/ipc.c).  The Spark form:
 
 - source: ``readStream`` over the pages table directory (Iceberg/parquet);
 - stateless match: the exact same compiled plan as batch
   (:meth:`SaganSparkEngine.match_hits` — pandas UDFs and the columnar
   rule fan-out are streaming-safe because they are narrow);
 - correlation: ``applyInPandasWithState`` keyed (sid, track-key), state =
-  the after/threshold counters, timeout = event-time TTL.  Dropping
-  state after ``seconds`` of silence is *semantics-preserving*: the gap
+  the after/threshold counters as JSON keyed by track string
+  (``STATE_SCHEMA``), timeout = event-time TTL.  Dropping state after
+  the longest window of silence is *semantics-preserving*: the gap
   reset (after.c:132-137, threshold.c:141-146) makes a stale counter
   indistinguishable from a fresh one;
 - sinks: ``foreachBatch`` fan-out to the same per-sink tables as batch,
-  with the streaming checkpoint providing exactly-once resume — the
-  north_rule's "resumes from Iceberg snapshot + checkpoint".
+  with the streaming checkpoint providing exactly-once resume.
 
-xbit/flexbit **conditions** (cross-rule bits) run as a chained
-two-query pipeline (``run_pipeline_with_xbits``): stage A routes
-stateless+stateful rules and stages set/unset events into a
-time-bucketed store; stage B replays condition rules against the staged
-store with last-write-wins precedence.  Plain-xbit unset, flexbit
-direction shapes, AND flexbit unset are all supported — bits carrying a
-flexbit unset stage full-tuple events and stage B replays the
-reference's flat-store scan per bit (the same funnel model as batch
-correlate.apply_xbits).  after/threshold ON an xbit-condition rule also
-runs in stage B: the counters advance only on condition-PASSING rows
-(reference order engine.c:999-1024 vs 1373-1389) via a per-(sid,
-track-key) replay whose state is seeded from the previous micro-batch's
-snapshot (``corr_state_b``, idempotent batch-id partitions, retry reads
-the prior batch's snapshot).  Chained xbits (one rule checks bit A and
-sets bit B) run per component inside each micro-batch via the same
-verdict-gated walk as batch, with fired sets persisted to the staged
-store for later batches.  No batch-only rule combinations remain.
+Correlation state changes only in :mod:`sagan_spark.pipeline.correlate`:
+every after/threshold transition is ``advance_corr_machines`` and every
+xbit/flexbit store event is ``bit_store_step``, the same kernels the
+batch replay and walk run.  This module owns what is streaming-specific:
+group state, seeding machines from snapshots, the staged set store and
+the foreachBatch I/O around those kernels.
+
+xbit/flexbit **conditions** run as a chained two-query pipeline
+(``run_pipeline_with_xbits``):
+
+- stage A (``start_sink_query``) routes stateless and stateful rules
+  and stages set/unset events into a time-bucketed store
+  (``xbit_sets``); flexbits that take correlate's funnel form stage
+  full-tuple events;
+- stage B (``start_xbit_query``) routes condition rules against the
+  staged store: keyed bits by a last-write-wins range join, funnel bits
+  and chained xbits (one rule checks bit A and sets bit B) by
+  ordered walks over ``bit_store_step``, with fired chain sets written
+  back to the store for later batches;
+- after/threshold ON a condition rule also runs in stage B, on
+  condition-PASSING rows only (engine.c:999-1024 vs 1373-1389), with
+  machine state seeded from the previous micro-batch's snapshot
+  (``corr_state_b``/``chain_corr_state``; idempotent batch-id
+  partitions, a retried batch reads the prior batch's snapshot).
 """
 
 from __future__ import annotations
@@ -250,28 +256,28 @@ _CHAIN_WALK_SCHEMA = (
 def _make_chain_walk(chain_corr_specs: dict[int, dict], max_corr_secs: int):
     """Stage-B component walk for chained xbits: ordered replay of
     staged sets + this batch's checks and verdict-gated chain
-    set/unsets (mirror of the batch apply_xbits walk).  Plain xbits use
-    (name, key) state; flexbits use the reference's flat tuple store
-    (src/flexbit-mmap.c) — 'f*' kinds carry (shape, e_src, e_dst,
-    e_user).  'v' rows carry the raw bit-state for the flag columns
-    (`ok` = bit active, the isnotset negation happens in the verdict
-    expression); gated sets that actually fired come back as
-    'fired_set'/'fired_unset'/'fired_fset'/'fired_funset' rows for the
-    staged store.
+    set/unsets.  Every store event goes through
+    correlate.bit_store_step and every chain rule's counters through
+    correlate.advance_corr_machines, keyed (sid, track) — the same
+    kernels, gating and kinds as the batch apply_xbits walk.  What is
+    stage-B specific is the row schema and the state carried across
+    micro-batches:
 
-    ``chain_corr_specs``: after/threshold specs of CHAIN rules — their
-    counters run inside the walk on condition-passing events only, and
-    the machine verdict gates both the set and the alert
-    (engine.c:1370-1427).  Machine state is seeded from the previous
-    micro-batch's snapshot ('cseed' rows, sorted first) and the
-    surviving state comes back as 'cstate' rows (machine in bit_name,
-    key in bit_key, count in seq, utime in expire); per-hit flags come
-    back as 'cflags' rows.  Keys silent longer than ``max_corr_secs``
-    gap-reset to fresh state and are dropped from the snapshot (the
-    same survive-or-evict rule as _make_seeded_replay)."""
+    - 'v' rows carry the raw bit state per condition entry (`ok` = bit
+      active; the isnotset negation happens in the verdict expression);
+    - gated sets that fired come back as 'fired_set'/'fired_unset'/
+      'fired_fset'/'fired_funset' rows for the staged store;
+    - chain machines are seeded from the previous micro-batch's
+      snapshot ('cseed' rows, sorted first), per-hit machine flags come
+      back as 'cflags' rows and the surviving machine state as 'cstate'
+      rows (machine in bit_name, key in bit_key, count in seq, utime in
+      expire).  Keys silent longer than ``max_corr_secs`` gap-reset to
+      fresh state and are dropped from the snapshot (the same
+      survive-or-evict rule as _make_seeded_replay)."""
     from sagan_spark.pipeline.correlate import (
-        _flex_tuple_match,
+        CHAIN_KINDS,
         advance_corr_machines,
+        bit_store_step,
     )
 
     def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -286,15 +292,6 @@ def _make_chain_walk(chain_corr_specs: dict[int, dict], max_corr_secs: int):
         # key's far-future event evict another key's still-live
         # machine, losing alerts a batch replay produces
         key_max: dict = {}
-
-        def _funset(name, shape, esrc, edst, euser) -> None:
-            store = fstate.get(name)
-            if store:
-                dead = [
-                    t for t in store if _flex_tuple_match(shape, t, esrc, edst, euser)
-                ]
-                for t in dead:
-                    del store[t]
 
         for pdf in batches:
             out: list[tuple] = []
@@ -315,26 +312,22 @@ def _make_chain_walk(chain_corr_specs: dict[int, dict], max_corr_secs: int):
                 machine suppresses (engine.c:1402-1427)."""
                 if not chain_corr_specs or sid is None or pd.isna(sid):
                     return True
-                spec = chain_corr_specs.get(int(sid))
+                sid = int(sid)
+                spec = chain_corr_specs.get(sid)
                 if spec is None:
                     return True
                 fl = corr_flags.get(ver_id)
                 if fl is None:
                     t = int(ts_d)
-                    if spec["after"] is not None:
-                        ka = ("a", int(sid), a_key)
-                        if key_max.get(ka, t) <= t:
-                            key_max[ka] = t
-                    if spec["threshold"] is not None:
-                        kt = ("t", int(sid), t_key)
-                        if key_max.get(kt, t) <= t:
-                            key_max[kt] = t
+                    for km in (("a", sid, a_key), ("t", sid, t_key)):
+                        if key_max.get(km, t) <= t:
+                            key_max[km] = t
                     fl = advance_corr_machines(
-                        spec, a_state, t_state, int(sid), t, a_key, t_key
+                        spec, a_state, t_state, t, (sid, a_key), (sid, t_key)
                     )
                     corr_flags[ver_id] = fl
                     out.append(
-                        ("cflags", ver_id.rsplit("#", 1)[0], int(sid), -1,
+                        ("cflags", ver_id.rsplit("#", 1)[0], sid, -1,
                          None, "", "", ts_d, 0, 0, "", "", "", "",
                          fl[0], fl[1])
                     )
@@ -344,81 +337,33 @@ def _make_chain_walk(chain_corr_specs: dict[int, dict], max_corr_secs: int):
                 kind, name, key, ts_d, ek, seq, expire, sid, entry, want_set,
                 ver_id, shape, esrc, edst, euser, a_key, t_key,
             ) in it:
-                if kind == "set":
-                    state[(name, key)] = (ts_d, expire)
-                elif kind == "unset":
-                    state.pop((name, key), None)
-                elif kind == "fset":
-                    fstate.setdefault(name, {})[(esrc, edst, euser)] = (ts_d, expire)
-                elif kind == "funset":
-                    _funset(name, shape, esrc, edst, euser)
-                elif kind == "cseed":
+                if kind == "cseed":
                     # previous micro-batch's machine snapshot: shape
                     # carries the machine id, seq the count, expire the
                     # utime (ts_d sorts these before every event)
                     mstate = a_state if shape == "a" else t_state
                     mstate[(int(sid), key)] = [int(seq), int(expire)]
-                elif kind == "cset":
-                    if ver.get(ver_id, False) and _corr_gate(
-                        sid, ver_id, ts_d, a_key, t_key
+                    continue
+                fired = kind in CHAIN_KINDS
+                if fired:
+                    if not (
+                        ver.get(ver_id, False)
+                        and _corr_gate(sid, ver_id, ts_d, a_key, t_key)
                     ):
-                        state[(name, key)] = (ts_d, expire)
-                        out.append(
-                            ("fired_set", ek, None, -1, False, name, key,
-                             ts_d, seq, expire, "", "", "", "", None, None)
-                        )
-                elif kind == "cunset":
-                    if ver.get(ver_id, False) and _corr_gate(
-                        sid, ver_id, ts_d, a_key, t_key
-                    ):
-                        state.pop((name, key), None)
-                        out.append(
-                            ("fired_unset", ek, None, -1, False, name, key,
-                             ts_d, seq, expire, "", "", "", "", None, None)
-                        )
-                elif kind == "cfset":
-                    if ver.get(ver_id, False) and _corr_gate(
-                        sid, ver_id, ts_d, a_key, t_key
-                    ):
-                        fstate.setdefault(name, {})[(esrc, edst, euser)] = (
-                            ts_d,
-                            expire,
-                        )
-                        out.append(
-                            ("fired_fset", ek, None, -1, False, name, key,
-                             ts_d, seq, expire, shape, esrc, edst, euser,
-                             None, None)
-                        )
-                elif kind == "cfunset":
-                    if ver.get(ver_id, False) and _corr_gate(
-                        sid, ver_id, ts_d, a_key, t_key
-                    ):
-                        _funset(name, shape, esrc, edst, euser)
-                        out.append(
-                            ("fired_funset", ek, None, -1, False, name, key,
-                             ts_d, seq, expire, shape, esrc, edst, euser,
-                             None, None)
-                        )
-                elif kind == "fcheck":
-                    store = fstate.get(name, {})
-                    active = any(
-                        (exp == 0 or (ts_d - set_ts) < exp)
-                        and _flex_tuple_match(shape, t, esrc, edst, euser)
-                        for t, (set_ts, exp) in store.items()
-                    )
-                    cond_ok = bool(active) == bool(want_set)
-                    ver[ver_id] = ver.get(ver_id, True) and cond_ok
+                        continue
+                    kind = kind[1:]
+                active = bit_store_step(
+                    state, fstate, kind, name, key, ts_d, expire, shape, (esrc, edst, euser)
+                )
+                if fired:
                     out.append(
-                        ("v", ek, int(sid), int(entry), bool(active), name, key,
-                         ts_d, seq, expire, "", "", "", "", None, None)
+                        ("fired_" + kind, ek, None, -1, False, name, key,
+                         ts_d, seq, expire, shape, esrc, edst, euser, None, None)
                     )
-                else:  # check
-                    st = state.get((name, key))
-                    active = st is not None and (st[1] == 0 or (ts_d - st[0]) < st[1])
-                    cond_ok = bool(active) == bool(want_set)
-                    ver[ver_id] = ver.get(ver_id, True) and cond_ok
+                elif active is not None:
+                    ver[ver_id] = ver.get(ver_id, True) and active == bool(want_set)
                     out.append(
-                        ("v", ek, int(sid), int(entry), bool(active), name, key,
+                        ("v", ek, int(sid), int(entry), active, name, key,
                          ts_d, seq, expire, "", "", "", "", None, None)
                     )
             yield pd.DataFrame(out, columns=_CHAIN_WALK_COLS)
@@ -494,13 +439,15 @@ def _read_prev_corr_state(spark: SparkSession, path: str, batch_id: int):
 
 
 def _make_seeded_replay(specs: dict[int, dict], max_secs: int):
-    """Per-(sid, corr_group) after/threshold replay with state seeded
-    from the previous micro-batch's snapshot — the same machines as
-    correlate.apply_after_threshold (threshold.c:54-234, after.c:51-229),
+    """Per-(sid, corr_group) after/threshold replay for stage B: the
+    correlate.advance_corr_machines kernel, keyed by track string,
     running on xbit-condition-PASSING rows only (engine.c:1373-1389).
-    Emits one flag row per event plus the group's surviving state rows
-    (keys silent past max_secs gap-reset to fresh state and are
-    dropped)."""
+    What is stage-B specific is the state around it: machines are
+    seeded from the previous micro-batch's snapshot ('s' rows), and the
+    replay emits one flag row per event ('e') plus the group's
+    surviving state rows ('s'; keys silent past max_secs gap-reset to
+    fresh state and are dropped)."""
+    from sagan_spark.pipeline.correlate import advance_corr_machines
 
     def replay(pdf: pd.DataFrame) -> pd.DataFrame:
         sid = int(pdf["sid"].iloc[0])
@@ -518,50 +465,15 @@ def _make_seeded_replay(specs: dict[int, dict], max_secs: int):
         ev = pdf[pdf["kind"] == "e"].sort_values(
             ["ts_us", "event_key"], kind="mergesort"
         )
-        out_ek, out_a, out_t = [], [], []
+        rows = []
         max_t = 0
         for r in ev.itertuples():
             t = int(r.ts_epoch)
             max_t = max(max_t, t)
-            suppressed = False
-            if spec and spec["after"] is not None:
-                a_count, a_secs = spec["after"]
-                s = a_state.get(r.track_after)
-                if s is None:
-                    a_state[r.track_after] = [1, t]
-                    suppressed = True
-                else:
-                    s[0] += 1
-                    oldtime = t - s[1]
-                    flag = True
-                    if oldtime > a_secs:
-                        s[0], s[1] = 1, t
-                    if a_count < s[0]:
-                        s[1] = t
-                        flag = False
-                    suppressed = flag
-            sup_thr = False
-            if spec and spec["threshold"] is not None and not suppressed:
-                ttype, t_count, t_secs = spec["threshold"]
-                s = t_state.get(r.track_threshold)
-                if s is None:
-                    t_state[r.track_threshold] = [1, t]
-                else:
-                    s[0] += 1
-                    oldtime = t - s[1]
-                    if ttype == "suppress":
-                        s[1] = t
-                    if oldtime > t_secs:
-                        s[0], s[1] = 1, t
-                    if t_count < s[0]:
-                        sup_thr = True
-            out_ek.append(r.event_key)
-            out_a.append(suppressed)
-            out_t.append(sup_thr)
-        rows = [
-            ("e", sid, grp, ek, sa, stp, "", "", 0, 0)
-            for ek, sa, stp in zip(out_ek, out_a, out_t)
-        ]
+            sa, stp = advance_corr_machines(
+                spec, a_state, t_state, t, r.track_after, r.track_threshold
+            )
+            rows.append(("e", sid, grp, r.event_key, sa, stp, "", "", 0, 0))
         # survive-or-evict: a key silent past max_secs replays as fresh
         cutoff = max_t - max_secs
         for machine, state in (("a", a_state), ("t", t_state)):
@@ -595,7 +507,7 @@ class StreamingSaganEngine:
         if self.cond_sids and not enable_xbits:
             raise NotImplementedError(
                 f"sids {self.cond_sids}: xbit conditions need the chained "
-                "pipeline — use start_pipeline_with_xbits (or batch "
+                "pipeline — use run_pipeline_with_xbits (or batch "
                 "SaganSparkEngine.run)"
             )
         # after/threshold ON a condition rule runs in stage B, seeded
@@ -658,7 +570,11 @@ class StreamingSaganEngine:
         # both-after+threshold rules group per shared track key when the
         # two machines key identically (see correlate.corr_group_key —
         # only a mixed-track both-rule needs the per-sid funnel)
-        from sagan_spark.pipeline.correlate import corr_group_key
+        from sagan_spark.pipeline.correlate import (
+            advance_corr_machines,
+            corr_group_key,
+            max_corr_secs,
+        )
 
         corr = corr.withWatermark("ts", self.watermark).withColumn(
             "corr_group", corr_group_key(specs)
@@ -674,10 +590,7 @@ class StreamingSaganEngine:
         )
         out_cols = [f.name for f in out_struct.fields]
         # TTL beyond which a silent key's counters equal fresh state
-        max_secs = max(
-            max(v["after"][1] if v["after"] else 0, v["threshold"][2] if v["threshold"] else 0)
-            for v in specs.values()
-        )
+        max_secs = max_corr_secs(specs)
         specs_local = specs  # close over plain dict (picklable)
 
         def replay(
@@ -686,64 +599,30 @@ class StreamingSaganEngine:
             if state.hasTimedOut:
                 state.remove()
                 return
-            sid = int(key[0])
-            spec = specs_local.get(sid)
+            spec = specs_local[int(key[0])]
+            # one group = one (sid, track-key) slot: the machines key by
+            # track string, the STATE_SCHEMA JSON layout
             a_state: dict = {}
             t_state: dict = {}
             if state.exists:
                 a_json, t_json = state.get
-                a_state = {k: v for k, v in json.loads(a_json).items()}
-                t_state = {k: v for k, v in json.loads(t_json).items()}
+                a_state, t_state = json.loads(a_json), json.loads(t_json)
 
             pdf = pd.concat(list(pdfs), ignore_index=True)
             # canonical replay order inside the micro-batch
             pdf = pdf.sort_values(["ts", "event_key"], kind="mergesort")
-            n = len(pdf)
             ts_epoch = (pdf["ts"].astype("int64") // 1_000_000_000).to_numpy()
-            a_keys = pdf["track_after"].to_numpy()
-            t_keys = pdf["track_threshold"].to_numpy()
-            sup_after = [False] * n
-            sup_thresh = [False] * n
-            max_t = 0
-            for i in range(n):
-                t = int(ts_epoch[i])
-                max_t = max(max_t, t)
-                suppressed = False
-                if spec and spec["after"] is not None:
-                    a_count, a_secs = spec["after"]
-                    st = a_state.get(a_keys[i])
-                    if st is None:
-                        a_state[a_keys[i]] = [1, t]
-                        suppressed = True
-                    else:
-                        st[0] += 1
-                        oldtime = t - st[1]
-                        flag = True
-                        if oldtime > a_secs:
-                            st[0], st[1] = 1, t
-                        if a_count < st[0]:
-                            st[1] = t
-                            flag = False
-                        suppressed = flag
-                    sup_after[i] = suppressed
-                if spec and spec["threshold"] is not None and not suppressed:
-                    ttype, t_count, t_secs = spec["threshold"]
-                    st = t_state.get(t_keys[i])
-                    if st is None:
-                        t_state[t_keys[i]] = [1, t]
-                    else:
-                        st[0] += 1
-                        oldtime = t - st[1]
-                        if ttype == "suppress":
-                            st[1] = t
-                        if oldtime > t_secs:
-                            st[0], st[1] = 1, t
-                        if t_count < st[0]:
-                            sup_thresh[i] = True
+            flags = [
+                advance_corr_machines(spec, a_state, t_state, int(t), ak, tk)
+                for t, ak, tk in zip(
+                    ts_epoch, pdf["track_after"].to_numpy(), pdf["track_threshold"].to_numpy()
+                )
+            ]
+            max_t = int(ts_epoch.max(initial=0))
 
             pdf = pdf.copy()
-            pdf["suppressed_after"] = sup_after
-            pdf["suppressed_threshold"] = sup_thresh
+            pdf["suppressed_after"] = [f[0] for f in flags]
+            pdf["suppressed_threshold"] = [f[1] for f in flags]
             state.update((json.dumps(a_state), json.dumps(t_state)))
             # silent-key eviction: past this instant the counters are
             # indistinguishable from fresh state (gap reset)
@@ -768,8 +647,6 @@ class StreamingSaganEngine:
         alerts = self.alerts_stream(frame)
         return alerts.filter(~F.col("suppressed_after") & ~F.col("suppressed_threshold"))
 
-    # -- sinks -----------------------------------------------------------------
-
     # -- staged xbit set-store layout -----------------------------------------
 
     def _max_expire(self) -> int:
@@ -783,39 +660,6 @@ class StreamingSaganEngine:
         """Time-bucket width for the staged set store — buckets older
         than (min live check ts - max expire) physically prune."""
         return max(3600, self._max_expire())
-
-    def _cond_shapes_by_bit(self) -> dict[str, set]:
-        from sagan_spark.pipeline.correlate import flex_shape
-
-        out: dict[str, set] = {}
-        for r in self.rules:
-            if r.sid not in self.cond_sids:
-                continue
-            for x in r.xbits:
-                s = flex_shape(x.track)
-                if x.action in ("isset", "isnotset") and s is not None:
-                    out.setdefault(x.name, set()).add(s)
-        return out
-
-    def _funnel_bits(self) -> set[str]:
-        """Flexbit names carrying an UNSET — the reference clears
-        matching tuples across ALL shapes (flexbit-mmap.c:973-1100) —
-        plus every flexbit a CHAIN rule touches (its verdict-gated sets
-        and the checks that observe them replay in one component walk).
-        These bits stage full-tuple events and stage B replays the
-        flat-store walk (same funnel model as batch
-        correlate.apply_xbits)."""
-        from sagan_spark.pipeline.correlate import chain_components, flex_shape
-
-        chain_rules, _ = chain_components(self.rules)
-        chain_sids = {r.sid for r in chain_rules}
-        return {
-            x.name
-            for r in self.rules
-            for x in r.xbits
-            if (x.track == "flex_auto" or flex_shape(x.track) is not None)
-            and (x.action == "unset" or r.sid in chain_sids)
-        }
 
     def start_sink_query(
         self,
@@ -833,10 +677,12 @@ class StreamingSaganEngine:
         rewrites its own partition instead of appending duplicates
         (foreachBatch alone is only at-least-once)."""
         from sagan_spark.pipeline.correlate import (
-            flex_set_key,
+            _cond_shapes_by_bit,
+            _funnel_bits,
+            _set_variants,
             flex_shape,
+            is_flexbit,
             ts_seconds_d,
-            xbit_key_expr,
         )
         from sagan_spark.pipeline.route import (
             SINK_BUILDERS,
@@ -849,13 +695,13 @@ class StreamingSaganEngine:
         rules = self.rules
         sink_names = sinks or list(SINK_BUILDERS)
         suppress = sink_suppressions(rules)
-        shapes_by_bit = self._cond_shapes_by_bit()
+        shapes_by_bit = _cond_shapes_by_bit(rules)
         bucket_secs = self._bucket_secs()
         # setter rules' surviving alerts also stage their set/unset events
         # for the chained xbit query (engine.c:1415-1427: sets happen only
         # after after/threshold survival).  Flexbit sets stage one keyed
         # copy per condition-probed shape (batch walk's variant model).
-        funnel_bits = self._funnel_bits()
+        funnel_bits = _funnel_bits(rules)
         # (sid, xbit, pos, bit_name, key_expr, funnel?)
         setters = []
         for r in rules:
@@ -864,18 +710,11 @@ class StreamingSaganEngine:
             for x in r.xbits:
                 if x.action not in ("set", "unset"):
                     continue
-                is_flex = x.track == "flex_auto" or flex_shape(x.track) is not None
-                if is_flex and x.name in funnel_bits:
+                if is_flexbit(x.track) and x.name in funnel_bits:
                     # funnel: one full-tuple event, no per-shape copies
                     setters.append((r.sid, x, r.position, x.name, F.lit(""), True))
                     continue
-                if is_flex:
-                    own = flex_shape(x.track)
-                    shapes = [own] if own else sorted(shapes_by_bit.get(x.name, ()))
-                    variants = [(f"{x.name}#{s}", flex_set_key(s)) for s in shapes]
-                else:
-                    variants = [(x.name, xbit_key_expr(x.track))]
-                for bit_name, key in variants:
+                for bit_name, key in _set_variants(x, shapes_by_bit):
                     setters.append((r.sid, x, r.position, bit_name, key, False))
 
         def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -975,12 +814,15 @@ class StreamingSaganEngine:
         order: live set => bit set (mirrors the batch walk's
         last-write-wins state)."""
         from sagan_spark.pipeline.correlate import (
+            _check_variant,
             _corr_spec_map,
-            _flex_tuple_match,
+            _funnel_bits,
+            bit_store_step,
             chain_components,
             corr_group_key,
-            flex_check_key,
             flex_shape,
+            is_flexbit,
+            max_corr_secs,
             ts_seconds_d,
             ts_seconds_l,
             xbit_key_expr,
@@ -999,7 +841,7 @@ class StreamingSaganEngine:
         suppress = sink_suppressions(rules)
         bucket_secs = self._bucket_secs()
         max_expire = self._max_expire()
-        funnel_bits = self._funnel_bits()
+        funnel_bits = _funnel_bits(rules)
         # chained xbits (a condition AND a set/unset on one rule): their
         # member bits walk per component inside the micro-batch, gated
         # sets that fired persist to the staged store for later batches
@@ -1016,16 +858,6 @@ class StreamingSaganEngine:
         # gating both set and alert — engine.c:1370-1427), state seeded
         # across micro-batches from a snapshot store
         chain_corr_specs = _corr_spec_map(chain_rules_b)
-        max_corr_secs = max(
-            (
-                max(
-                    v["after"][1] if v["after"] else 0,
-                    v["threshold"][2] if v["threshold"] else 0,
-                )
-                for v in chain_corr_specs.values()
-            ),
-            default=0,
-        )
         # route a rule's machine seeds to its component's walk partition
         chain_route_bit = {
             r.sid: r.xbits[0].name
@@ -1110,7 +942,10 @@ class StreamingSaganEngine:
                     # _col bound at definition: the walk executes lazily
                     # at write time, after col_name has moved on
                     def funnel_walk(batches, _col=col_name):
-                        store: dict = {}
+                        # one bit per walk: its flat store under name ""
+                        # (plain state stays empty: only f-kinds arrive)
+                        state: dict = {}
+                        fstate: dict = {}
                         for pdf in batches:
                             ids, active_out = [], []
                             it = zip(
@@ -1119,23 +954,12 @@ class StreamingSaganEngine:
                                 pdf["e_user"], pdf["hit_id"],
                             )
                             for kind, shp, ts_d, expire, es, ed, eu, hid in it:
-                                if kind == "fset":
-                                    store[(es, ed, eu)] = (ts_d, expire)
-                                elif kind == "funset":
-                                    dead = [
-                                        t for t in store
-                                        if _flex_tuple_match(shp, t, es, ed, eu)
-                                    ]
-                                    for t in dead:
-                                        del store[t]
-                                else:
-                                    active = any(
-                                        (exp == 0 or (ts_d - st) < exp)
-                                        and _flex_tuple_match(shp, t, es, ed, eu)
-                                        for t, (st, exp) in store.items()
-                                    )
+                                active = bit_store_step(
+                                    state, fstate, kind, "", "", ts_d, expire, shp, (es, ed, eu)
+                                )
+                                if active is not None:
                                     ids.append(hid)
-                                    active_out.append(bool(active))
+                                    active_out.append(active)
                             yield pd.DataFrame({"event_key": ids, _col: active_out})
 
                     verdicts = (
@@ -1150,10 +974,7 @@ class StreamingSaganEngine:
                     ).withColumn(col_name, F.coalesce(F.col(col_name), F.lit(False)))
                     flag_cols.append((sid, x.action, col_name))
                     continue
-                if shape is not None:
-                    bit_name, key = f"{x.name}#{shape}", flex_check_key(shape)
-                else:
-                    bit_name, key = x.name, xbit_key_expr(x.track)
+                bit_name, key = _check_variant(x)
                 s = sets.filter(F.col("bit_name") == bit_name)
                 probe = batch_df.filter(F.col("sid") == sid).select(
                     F.col("event_key").alias("chk_event_key"),
@@ -1256,9 +1077,7 @@ class StreamingSaganEngine:
                         )
                     )
                 for sid, x, pos in chain_set_specs:
-                    is_flex = (
-                        x.track == "flex_auto" or flex_shape(x.track) is not None
-                    )
+                    is_flex = is_flexbit(x.track)
                     parts.append(
                         batch_df.filter(F.col("sid") == sid).select(
                             F.lit(
@@ -1379,7 +1198,9 @@ class StreamingSaganEngine:
                     .repartition(n_comps, "comp")
                     .sortWithinPartitions("ts_d", "event_key", "seq")
                     .mapInPandas(
-                        _make_chain_walk(chain_corr_specs, max_corr_secs),
+                        _make_chain_walk(
+                            chain_corr_specs, max_corr_secs(chain_corr_specs)
+                        ),
                         schema=_CHAIN_WALK_SCHEMA,
                     )
                     .persist()
@@ -1514,17 +1335,10 @@ class StreamingSaganEngine:
                             "utime",
                         )
                     )
-                max_secs_b = max(
-                    max(
-                        v["after"][1] if v["after"] else 0,
-                        v["threshold"][2] if v["threshold"] else 0,
-                    )
-                    for v in corr_specs_b.values()
-                )
                 replayed = (
                     narrow.groupBy("sid", "corr_group")
                     .applyInPandas(
-                        _make_seeded_replay(corr_specs_b, max_secs_b),
+                        _make_seeded_replay(corr_specs_b, max_corr_secs(corr_specs_b)),
                         schema=_CORR_B_OUT_SCHEMA,
                     )
                     .persist()

@@ -132,3 +132,112 @@ def test_v4_int_equals_ipaddress_on_arbitrary_tokens(tok):
     except Exception:
         want = None
     assert _v4_int(tok) == want, repr(tok)
+
+
+# ---------------------------------------------------------------------------
+# correlation kernels vs the oracle's transliteration of the reference
+# state machines (Spark-free: the kernels are plain Python)
+# ---------------------------------------------------------------------------
+
+_CORR_KINDS = ["after", "limit", "suppress", "after+limit", "after+suppress"]
+_TRACKS = [["by_src"], ["by_dst"], ["by_src", "by_dst"]]
+_IPS = ["10.0.0.1", "10.0.0.2", "10.0.0.3"]
+
+
+def _ext(src: str, dst: str) -> dict:
+    return {"src_ip": src, "dst_ip": dst, "username": "", "src_port": 0, "dst_port": 0}
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    kind=st.sampled_from(_CORR_KINDS),
+    a_track=st.sampled_from(_TRACKS),
+    t_track=st.sampled_from(_TRACKS),
+    a_count=st.integers(0, 4),
+    a_secs=st.integers(0, 30),
+    t_count=st.integers(0, 4),
+    t_secs=st.integers(0, 30),
+    events=st.lists(
+        st.tuples(st.integers(0, 15), st.sampled_from(_IPS), st.sampled_from(_IPS)),
+        min_size=1,
+        max_size=40,
+    ),
+)
+def test_corr_kernel_matches_oracle(
+    kind, a_track, t_track, a_count, a_secs, t_count, t_secs, events
+):
+    """advance_corr_machines == Oracle._after/_threshold over random
+    (ts, track) sequences, including the after gate on threshold
+    updates (engine.c:1377-1389) and the final per-key state."""
+    from sagan_spark.pipeline.correlate import _corr_spec_map, advance_corr_machines
+    from sagan_spark.rules.ir import AfterSpec, RuleIR, ThresholdSpec
+    from tests.oracle import Oracle
+
+    rule = RuleIR(
+        sid=7,
+        after=AfterSpec(a_track, a_count, a_secs) if "after" in kind else None,
+        threshold=(
+            ThresholdSpec(kind.rsplit("+", 1)[-1], t_track, t_count, t_secs)
+            if kind != "after"
+            else None
+        ),
+    )
+    spec = _corr_spec_map([rule])[rule.sid]
+    oracle = Oracle([rule])
+    a_state: dict = {}
+    t_state: dict = {}
+    t = 1_700_000_000
+    for gap, src, dst in events:
+        t += gap
+        ext = _ext(src, dst)
+        want_a = oracle._after(rule, ext, t) if rule.after else False
+        want_t = (
+            oracle._threshold(rule, ext, t) if rule.threshold and not want_a else False
+        )
+        a_key = (rule.sid, Oracle._track_key(a_track, ext))
+        t_key = (rule.sid, Oracle._track_key(t_track, ext))
+        got = advance_corr_machines(spec, a_state, t_state, t, a_key, t_key)
+        assert got == (want_a, want_t), (t, src, dst)
+    assert a_state == oracle.after_state
+    assert t_state == oracle.thr_state
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    track=st.sampled_from(["ip_src", "ip_dst", "ip_pair"]),
+    events=st.lists(
+        st.tuples(
+            st.sampled_from([0.0, 0.5, 1.0, 3.0, 10.0]),
+            st.sampled_from(["set", "unset", "isset", "isnotset"]),
+            st.sampled_from(["b1", "b2"]),
+            st.sampled_from([0, 1, 3, 10]),
+            st.sampled_from(_IPS),
+            st.sampled_from(_IPS),
+        ),
+        min_size=1,
+        max_size=40,
+    ),
+)
+def test_bit_store_step_matches_oracle(track, events):
+    """bit_store_step set/unset/check == Oracle._xbit_set/_xbit_condition,
+    honoring expiry (xbit-mmap.c:181-264; expire 0 = permanent)."""
+    from sagan_spark.pipeline.correlate import bit_store_step
+    from sagan_spark.rules.ir import RuleIR, XbitSpec
+    from tests.oracle import Oracle
+
+    oracle = Oracle([])
+    state: dict = {}
+    t = 1_700_000_000.0
+    for gap, action, name, expire, src, dst in events:
+        t += gap
+        ext = _ext(src, dst)
+        rule = RuleIR(sid=1, xbits=[XbitSpec(action, name, track, expire)])
+        key = oracle._xbit_key(track, ext)
+        tup = (src, dst, "")
+        if action in ("set", "unset"):
+            oracle._xbit_set(rule, ext, t)
+            assert bit_store_step(state, {}, action, name, key, t, expire, "", tup) is None
+        else:
+            active = bit_store_step(state, {}, "check", name, key, t, 0, "", tup)
+            assert (active == (action == "isset")) == oracle._xbit_condition(rule, ext, t)
+    assert state == oracle.xbit_state
