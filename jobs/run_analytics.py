@@ -16,7 +16,8 @@ One read of the events table fans into six product tables, every one
 an operator that already carries its own correctness gate (sessions,
 session_rollup, funnel-free burst flags, exact quantiles, the
 time-rollup cascade, DAU/WAU actives) — the job adds deployment,
-the per-stage row ledger, and the run_batch resume-marker no-op.
+the per-stage row ledger, and the resume-marker no-op every job
+shares (``sagan_spark.runs``).
 All products are deterministic integer arithmetic, so a crash-retry
 or a cluster-size change rewrites byte-identical tables.
 """
@@ -29,8 +30,6 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import uuid
-
-from pyspark.sql import SparkSession
 
 
 def main() -> None:
@@ -50,57 +49,37 @@ def main() -> None:
     ap.add_argument("--run-id", default=uuid.uuid4().hex[:12])
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.appName("sagan_spark_analytics")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-
     from sagan_spark.ops.bursts import detect_bursts
     from sagan_spark.ops.funnel import active_users
     from sagan_spark.ops.quantiles import quantile_rollup
     from sagan_spark.ops.rollup import time_rollup
     from sagan_spark.ops.sessions import session_rollup, sessionize
+    from sagan_spark.runs import (
+        mark_run_completed,
+        overwrite_partition,
+        run_completed,
+        write_table,
+    )
+    from sagan_spark.session import job_session
 
-    def write(df, name):
-        path = f"{args.output}/{name}"
-        if args.format == "iceberg":
-            df.writeTo(path).createOrReplace()
-        else:
-            df.write.mode("overwrite").parquet(path)
+    spark = job_session("sagan_spark_analytics")
 
-    # resume guard (run_batch discipline; marker/ledger are always
-    # plain parquet regardless of --format, and read back as parquet)
-    if args.metrics:
-        try:
-            runs = spark.read.parquet(f"{args.metrics}/runs")
-            if runs.filter(runs.run_id == args.run_id).head(1):
-                print({"run_id": args.run_id, "skipped": "already completed"})
-                spark.stop()
-                return
-        except Exception:
-            pass
+    if args.metrics and run_completed(spark, args.metrics, args.run_id):
+        print({"run_id": args.run_id, "skipped": "already completed"})
+        spark.stop()
+        return
 
-    if args.format == "iceberg":
-        events = spark.read.format("iceberg").load(args.input)
-    else:
-        events = spark.read.parquet(args.input)
+    events = spark.read.format(args.format).load(args.input)
 
     counters = []
 
     def emit(name, df):
-        write(df, name)
+        path = f"{args.output}/{name}"
+        write_table(df, path, args.format)
         # count the WRITTEN table, not the logical frame — counting
         # the frame would re-execute the whole product chain a second
         # time; the written files carry the row count in their footers
-        path = f"{args.output}/{name}"
-        if args.format == "iceberg":
-            written = spark.read.format("iceberg").load(path)
-        else:
-            written = spark.read.parquet(path)
-        counters.append((name, written.count()))
+        counters.append((name, spark.read.format(args.format).load(path).count()))
 
     emit("sessions", sessionize(events, gap_sec=args.gap_sec))
     emit("session_rollup", session_rollup(events, gap_sec=args.gap_sec))
@@ -124,13 +103,8 @@ def main() -> None:
             [(args.run_id, n, int(c)) for n, c in counters],
             "run_id string, product string, n_rows long",
         )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (
-            ledger.write.mode("overwrite").partitionBy("run_id")
-            .parquet(f"{args.metrics}/stages")
-        )
-        marker = spark.createDataFrame([(args.run_id,)], "run_id string")
-        marker.write.mode("append").parquet(f"{args.metrics}/runs")
+        overwrite_partition(ledger, f"{args.metrics}/stages", ["run_id"])
+        mark_run_completed(spark, args.metrics, args.run_id)
 
     print({
         "run_id": args.run_id,

@@ -15,15 +15,17 @@ lang), runs parse -> enrich -> route -> aggregate, fans out to the
 per-sink tables (K1-K4/K7), and writes per-partition lineage + run
 counters to the metrics table (A11; north_rule requirement).
 
-On a cluster the session comes from spark-submit's conf (executors,
-shuffle partitions, AQE); builder settings here only fill local-run
-gaps.  Resume: sink writes are overwrite-mode (re-runs replace, never
-duplicate); with --metrics set, a completion marker row lands in
-``<metrics>/runs`` after the sinks commit, and a re-run with the same
---run-id that finds its marker exits without rewriting anything —
-lineage/counters land in run_id partitions written with dynamic
-partition OVERWRITE, so even a crash-retry of an unfinished run-id
-rewrites its own partition instead of appending a duplicate.
+On a cluster the session comes from spark-submit's conf
+(``session.job_session`` only fills unset keys).  Resume
+(``sagan_spark.runs``): sink writes are overwrite-mode (re-runs
+replace, never duplicate); with --metrics set, a completion marker row
+lands in the parquet ``<metrics>/runs`` table after the sinks commit,
+and a re-run with the same --run-id that finds its marker exits
+without rewriting anything.  The lineage/counters metrics tables are
+parquet whatever --format says, written into their run_id partition
+with dynamic partition OVERWRITE, so even a crash-retry of an
+unfinished run-id rewrites its own partition instead of appending a
+duplicate.
 """
 
 from __future__ import annotations
@@ -36,8 +38,6 @@ from pathlib import Path
 # --py-files covers the cluster case)
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import uuid
-
-from pyspark.sql import SparkSession
 
 
 def main() -> None:
@@ -57,39 +57,23 @@ def main() -> None:
     ap.add_argument("--run-id", default=uuid.uuid4().hex[:12])
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.appName("sagan_spark_batch")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-
     from sagan_spark.pipeline.engine import SaganSparkEngine
     from sagan_spark.pipeline.metrics import partition_lineage, run_counters
     from sagan_spark.pipeline.route import assemble_alerts, rule_metadata_df, write_sinks
-    from sagan_spark.rules.parser import parse_rules
+    from sagan_spark.rules.parser import load_vars, parse_rules
+    from sagan_spark.runs import mark_run_completed, overwrite_partition, run_completed
+    from sagan_spark.session import job_session
 
-    variables = {}
-    if args.vars:
-        for line in open(args.vars):
-            line = line.strip()
-            if line and not line.startswith("#") and "=" in line:
-                k, _, v = line.partition("=")
-                variables[k.strip()] = v.strip()
+    spark = job_session("sagan_spark_batch")
 
-    rules = parse_rules(open(args.rules).read(), variables)
+    variables = load_vars(args.vars) if args.vars else {}
+    rules = parse_rules(Path(args.rules).read_text(), variables)
 
     # resume guard: a completed run-id already has its marker -> no-op
-    if args.metrics:
-        try:
-            runs = spark.read.format(args.format).load(f"{args.metrics}/runs")
-            if runs.filter(runs.run_id == args.run_id).head(1):
-                print({"run_id": args.run_id, "skipped": "already completed"})
-                spark.stop()
-                return
-        except Exception:
-            pass  # no runs table yet — first run
+    if args.metrics and run_completed(spark, args.metrics, args.run_id):
+        print({"run_id": args.run_id, "skipped": "already completed"})
+        spark.stop()
+        return
 
     engine = SaganSparkEngine(rules)
     if args.input_format == "pipe":
@@ -106,24 +90,17 @@ def main() -> None:
                 mapping[fld.strip()] = [k.strip() for k in keys.split(",") if k.strip()]
         frame = decode_json_frame(spark.read.text(args.input), mapping, line_col="value")
     else:
-        if args.format == "iceberg":
-            pages = spark.read.format("iceberg").load(args.input)
-        else:
-            pages = spark.read.parquet(args.input)
-        frame = engine.frame_from_pages(pages)
+        frame = engine.frame_from_pages(spark.read.format(args.format).load(args.input))
 
     if args.metrics:
-        # dynamic-partition OVERWRITE keyed by run_id: a crash-retry of
-        # the same run-id rewrites its own partition instead of
-        # appending a second copy (the completion marker alone cannot
-        # make appends idempotent — lineage lands before the marker)
-        lineage = partition_lineage(frame, run_id=args.run_id)
-        (
-            lineage.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("run_id")
-            .format(args.format)
-            .save(f"{args.metrics}/lineage")
+        # run_id-partition OVERWRITE: a crash-retry of the same run-id
+        # rewrites its own partition instead of appending a second copy
+        # (the completion marker alone cannot make appends idempotent —
+        # lineage lands before the marker)
+        overwrite_partition(
+            partition_lineage(frame, run_id=args.run_id),
+            f"{args.metrics}/lineage",
+            ["run_id"],
         )
 
     result = engine.run(frame)
@@ -140,18 +117,14 @@ def main() -> None:
     if args.metrics:
         from pyspark.sql import functions as F
 
-        counters = run_counters(result.hits).withColumn("run_id", F.lit(args.run_id))
-        (
-            counters.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("run_id")
-            .format(args.format)
-            .save(f"{args.metrics}/counters")
+        overwrite_partition(
+            run_counters(result.hits).withColumn("run_id", F.lit(args.run_id)),
+            f"{args.metrics}/counters",
+            ["run_id"],
         )
         # completion marker LAST: its presence certifies the sinks above
         # committed, making a same-run-id retry a no-op
-        marker = spark.createDataFrame([(args.run_id,)], "run_id string")
-        marker.write.mode("append").format(args.format).save(f"{args.metrics}/runs")
+        mark_run_completed(spark, args.metrics, args.run_id)
 
     print({"run_id": args.run_id, "sinks": paths})
     spark.stop()

@@ -31,9 +31,10 @@ metrics table — the A11 discipline applied to curation):
 6. sample — ops.sampling.deterministic_sample (md5-threshold,
    reproducible across runs and cluster sizes).
 
-Resume: same marker discipline as run_batch — a completed --run-id
-no-ops; counters land in run_id partitions written with dynamic
-partition overwrite so a crash-retry rewrites its own partition.
+Resume (``sagan_spark.runs``, shared with every job): a completed
+--run-id no-ops; the parquet stage ledger lands in its run_id
+partition with dynamic partition overwrite, so a crash-retry rewrites
+its own partition.
 """
 
 from __future__ import annotations
@@ -45,7 +46,6 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import uuid
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 
@@ -69,44 +69,27 @@ def main() -> None:
     ap.add_argument("--run-id", default=uuid.uuid4().hex[:12])
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.appName("sagan_spark_corpus")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-
     from sagan_spark.ops.sampling import (
         deterministic_sample,
         domain_quota_sample,
     )
     from sagan_spark.ops.webclean import filter_verdict
+    from sagan_spark.runs import (
+        mark_run_completed,
+        overwrite_partition,
+        run_completed,
+        write_table,
+    )
+    from sagan_spark.session import job_session
 
-    def write(df, path):
-        if args.format == "iceberg":
-            df.writeTo(path).createOrReplace()
-        else:
-            df.write.mode("overwrite").parquet(path)
+    spark = job_session("sagan_spark_corpus")
 
-    # resume guard (run_batch discipline).  The marker and ledger are
-    # ALWAYS plain parquet (written below regardless of --format), so
-    # the guard must read parquet too — reading them with --format
-    # iceberg would throw, be swallowed, and silently disable resume
-    if args.metrics:
-        try:
-            runs = spark.read.parquet(f"{args.metrics}/runs")
-            if runs.filter(runs.run_id == args.run_id).head(1):
-                print({"run_id": args.run_id, "skipped": "already completed"})
-                spark.stop()
-                return
-        except Exception:
-            pass
+    if args.metrics and run_completed(spark, args.metrics, args.run_id):
+        print({"run_id": args.run_id, "skipped": "already completed"})
+        spark.stop()
+        return
 
-    if args.format == "iceberg":
-        raw = spark.read.format("iceberg").load(args.input)
-    else:
-        raw = spark.read.parquet(args.input)
+    raw = spark.read.format(args.format).load(args.input)
 
     counters = []
 
@@ -214,22 +197,15 @@ def main() -> None:
     final = deterministic_sample(capped, args.sample, salt="corpus")
     final = count_stage("sample", final)
 
-    write(final, args.output)
+    write_table(final, args.output, args.format)
 
     if args.metrics:
         ledger = spark.createDataFrame(
             [(args.run_id, n, int(c)) for n, c in counters],
             "run_id string, stage string, n_rows long",
         )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (
-            ledger.write.mode("overwrite").partitionBy("run_id")
-            .parquet(f"{args.metrics}/stages")
-        )
-        marker = spark.createDataFrame(
-            [(args.run_id,)], "run_id string"
-        )
-        marker.write.mode("append").parquet(f"{args.metrics}/runs")
+        overwrite_partition(ledger, f"{args.metrics}/stages", ["run_id"])
+        mark_run_completed(spark, args.metrics, args.run_id)
 
     print({
         "run_id": args.run_id,

@@ -29,8 +29,6 @@ from pathlib import Path
 # --py-files covers the cluster case)
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession
-
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -43,25 +41,15 @@ def main() -> None:
     ap.add_argument("--continuous", action="store_true")
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.appName("sagan_spark_stream")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-
     from sagan_spark.pipeline.engine import SaganSparkEngine
-    from sagan_spark.rules.parser import parse_rules
+    from sagan_spark.rules.parser import load_vars, parse_rules
+    from sagan_spark.session import job_session
     from sagan_spark.streaming import StreamingSaganEngine, pages_stream_frame
 
-    variables = {}
-    if args.vars:
-        for line in open(args.vars):
-            line = line.strip()
-            if line and not line.startswith("#") and "=" in line:
-                k, _, v = line.partition("=")
-                variables[k.strip()] = v.strip()
+    spark = job_session("sagan_spark_stream")
 
-    rules = parse_rules(open(args.rules).read(), variables)
+    variables = load_vars(args.vars) if args.vars else {}
+    rules = parse_rules(Path(args.rules).read_text(), variables)
     has_cond = any(
         x.action in ("isset", "isnotset") for r in rules for x in r.xbits
     )

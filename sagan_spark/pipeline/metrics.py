@@ -154,15 +154,3 @@ def stats_json_view(
         F.col("_maxlen").cast("long").alias("captured_max_bytes_log_line"),
         (F.col("_total").cast("long") / F.lit(up)).cast("long").alias("captured_eps"),
     )
-
-
-def per_sid_counts(hits: DataFrame) -> DataFrame:
-    return (
-        hits.filter(
-            ~F.col("suppressed_after")
-            & ~F.col("suppressed_threshold")
-            & F.col("xbit_ok")
-        )
-        .groupBy("sid")
-        .agg(F.count(F.lit(1)).alias("n_alerts"))
-    )

@@ -737,12 +737,6 @@ class RuleCompiler:
 
     # -- ruleset-level helpers -------------------------------------------------
 
-    def pass_rules(self) -> list[RuleIR]:
-        return [r for r in self.rules if r.action == "pass"]
-
-    def alert_rules(self) -> list[RuleIR]:
-        return [r for r in self.rules if r.action != "pass"]
-
     def ignore_predicate(self, message: Column) -> Column:
         """F14 ignore-list pre-drop (reference src/ignore.c:31-50):
         drop the line when ANY listed substring occurs."""

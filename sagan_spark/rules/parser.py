@@ -669,3 +669,18 @@ def parse_rules(
             )
         )
     return rules
+
+
+def load_vars(path) -> dict[str, str]:
+    """Read a ``vars.conf`` file (``KEY=value`` lines; '#' comments and
+    blanks skipped) into the ``variables`` map :func:`parse_rules`
+    expands — the spark-submit twin of the reference's sagan.yaml
+    ``vars`` block (src/config-yaml.c)."""
+    variables: dict[str, str] = {}
+    with open(path) as f:
+        for line in f:
+            line = line.strip()
+            if line and not line.startswith("#") and "=" in line:
+                k, _, v = line.partition("=")
+                variables[k.strip()] = v.strip()
+    return variables

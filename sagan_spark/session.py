@@ -70,10 +70,7 @@ def build_spark(
         # local[32]) the second run drops 12.9->7.2 s and steady state
         # is unchanged (6.3 vs 6.8 s); at 100 TB the warmup is amortized
         # but a long tail of short tasks still benefits from fast tier-up
-        .config(
-            "spark.sql.codegen.methodSplitThreshold",
-            os.environ.get("SAGAN_SPARK_SPLIT_THRESHOLD", "256"),
-        )
+        .config("spark.sql.codegen.methodSplitThreshold", "256")
         # per-Column-call site capture (error-message enrichment) costs two
         # extra py4j round trips + a Python stack walk on EVERY DataFrame
         # API call — at production ruleset sizes plan construction makes
@@ -85,3 +82,23 @@ def build_spark(
     for k, v in (extra or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+#: what the jobs in ``jobs/`` rely on; a key spark-submit already set wins
+_JOB_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+}
+
+
+def job_session(app: str) -> SparkSession:
+    """Session for a spark-submit job.  Cluster sizing and any conf
+    passed to spark-submit come from spark-submit; this only fills the
+    keys in ``_JOB_CONF`` that it left unset."""
+    spark = SparkSession.builder.appName(app).getOrCreate()
+    submitted = spark.sparkContext.getConf()
+    for k, v in _JOB_CONF.items():
+        if not submitted.contains(k):
+            spark.conf.set(k, v)
+    return spark

@@ -22,29 +22,24 @@ a map-only enrichment over each micro-batch.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from sagan_spark.ops.asof import asof_join_compact
 
 
 def start_asof_query(spark: SparkSession, input_dir: str, out_dir: str,
-                     checkpoint: str, dim: DataFrame,
-                     schema: T.StructType | None = None,
-                     trigger_available_now: bool = True, **kw):
+                     checkpoint: str, dim: DataFrame, **kw):
     """File-source convenience runner: stream an events parquet
     directory through :func:`ops.asof.asof_join_compact` against the
     static ``dim`` into a parquet sink with checkpointed exactly-once
     resume."""
-    if schema is None:
-        schema = spark.read.parquet(input_dir).schema
+    schema = spark.read.parquet(input_dir).schema
     events = spark.readStream.schema(schema).parquet(input_dir)
     enriched = asof_join_compact(events, dim, **kw)
-    writer = (
+    return (
         enriched.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint)
         .format("parquet")
         .option("path", out_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

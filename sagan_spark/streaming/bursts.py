@@ -123,23 +123,19 @@ def detect_bursts_stream(events: DataFrame, bucket_sec: int = 3600,
 
 
 def start_burst_query(spark: SparkSession, input_dir: str, out_dir: str,
-                      checkpoint: str,
-                      schema: T.StructType | None = None,
-                      trigger_available_now: bool = True, **kw):
+                      checkpoint: str, **kw):
     """File-source convenience runner (the start_session_query shape):
     stream an events parquet directory through
     :func:`detect_bursts_stream` into a parquet sink with checkpointed
     resume."""
-    if schema is None:
-        schema = spark.read.parquet(input_dir).schema
+    schema = spark.read.parquet(input_dir).schema
     events = spark.readStream.schema(schema).parquet(input_dir)
     flagged = detect_bursts_stream(events, **kw)
-    writer = (
+    return (
         flagged.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint)
         .format("parquet")
         .option("path", out_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

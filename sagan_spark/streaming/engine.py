@@ -58,6 +58,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from sagan_spark.pipeline.engine import EVENT_COLS, SaganSparkEngine
 from sagan_spark.rules.compiler import EngineConfig
 from sagan_spark.rules.ir import RuleIR
+from sagan_spark.runs import fs_for, overwrite_partition, read_parquet_or_none
 
 PAGES_SCHEMA = T.StructType(
     [
@@ -82,31 +83,6 @@ STATE_SCHEMA = T.StructType(
 def pages_stream_frame(spark: SparkSession, path: str) -> DataFrame:
     """readStream over a pages-table directory (S1/S2 streaming analog)."""
     return spark.readStream.schema(PAGES_SCHEMA).parquet(path)
-
-
-def _idempotent_write(
-    df: DataFrame,
-    path: str,
-    batch_id: int,
-    extra_partition: str | None = None,
-    writer_id: str = "a",
-) -> None:
-    """Idempotent foreachBatch write: the batch's rows land in a
-    ``batch_id=<writer>_<N>`` partition via dynamic partition
-    overwrite, so a replayed micro-batch (restart after mid-write
-    failure) rewrites its own partition instead of appending
-    duplicates.  ``writer_id`` namespaces the partition when two
-    queries (the chained pipeline's stage A and B) share one sink
-    path — without it their equal batch numbers would clobber each
-    other."""
-    parts = ["batch_id"] + ([extra_partition] if extra_partition else [])
-    (
-        df.withColumn("batch_id", F.lit(f"{writer_id}_{batch_id}"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*parts)
-        .parquet(path)
-    )
 
 
 #: seconds per CalendarInterval unit — every unit Spark's withWatermark
@@ -158,49 +134,6 @@ def _interval_secs(interval: str) -> float:
     return total
 
 
-def _fs_for(spark: SparkSession, path_str: str):
-    """Hadoop FileSystem for a path — works for file://, hdfs://, s3a://
-    alike (os-level glob/rmtree would silently no-op on cluster storage,
-    letting the 'physically bounded' stores grow forever)."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(path_str)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, path
-
-
-def _read_store_or_none(spark: SparkSession, path: str):
-    """Read a staged parquet store; None when it does not exist yet or
-    holds no data files (all partitions swept/pruned).  Any OTHER
-    failure raises: treating a transient FS/corruption error as "no
-    store" would silently reset streaming state and permanently diverge
-    from batch (over-alert thresholds, re-suppress afters, missed bit
-    checks)."""
-    from pyspark.errors import AnalysisException
-
-    fs, p = _fs_for(spark, path)
-    if not fs.exists(p):
-        return None
-    try:
-        return spark.read.option("basePath", path).parquet(path)
-    except AnalysisException as e:
-        # Prefer the structured error class (Spark >= 3.4); fall back to
-        # the legacy message text so a benign empty store never raises on
-        # an older runtime — exception-string formats drift across
-        # versions, error classes do not.
-        klass = e.getErrorClass() if hasattr(e, "getErrorClass") else None
-        empty_classes = {"UNABLE_TO_INFER_SCHEMA", "PATH_NOT_FOUND"}
-        if klass in empty_classes:
-            return None
-        if klass is None and (
-            "UNABLE_TO_INFER_SCHEMA" in str(e)
-            or "PATH_NOT_FOUND" in str(e)
-            or "Unable to infer schema" in str(e)
-            or "Path does not exist" in str(e)
-        ):
-            return None
-        raise
-
-
 def _sweep_dead_buckets(
     spark: SparkSession,
     path: str,
@@ -213,7 +146,7 @@ def _sweep_dead_buckets(
     bucket is dead once (b+1)*bucket_secs + max_expire <= min_live_ts.
     Permanent sets (bucket -1) are never swept — the reference keeps
     them until the IPC store wraps too (src/ipc.c:78-200)."""
-    fs, base = _fs_for(spark, path)
+    fs, base = fs_for(spark, path)
     removed: list[str] = []
     if not fs.exists(base):
         return removed
@@ -405,7 +338,7 @@ def _prune_old_corr_snapshots(spark: SparkSession, path: str, batch_id: int) -> 
     replayed batch N re-reads N-1, nothing ever reads older — without
     this the store grows one partition per micro-batch forever.
     Hadoop-FS-based so it also prunes on hdfs://, s3a://, etc."""
-    fs, base = _fs_for(spark, path)
+    fs, base = fs_for(spark, path)
     if not fs.exists(base):
         return
     for d in fs.listStatus(base):
@@ -424,7 +357,7 @@ def _read_prev_corr_state(spark: SparkSession, path: str, batch_id: int):
     """Latest stage-B correlation state snapshot written BEFORE this
     batch (retry-safe: a replayed batch N reads N-1's snapshot even if a
     half-written N partition exists)."""
-    df = _read_store_or_none(spark, path)
+    df = read_parquet_or_none(spark, path)
     if df is None:  # first batch: no state yet
         return None
     df = df.withColumn(
@@ -672,10 +605,13 @@ class StreamingSaganEngine:
         """foreachBatch fan-out to the per-sink tables (K7).
 
         Exactly-once on restart: each micro-batch's output lands in a
-        ``batch_id=N`` partition written with dynamic partition
-        OVERWRITE, so a batch replayed after a mid-write failure
-        rewrites its own partition instead of appending duplicates
-        (foreachBatch alone is only at-least-once)."""
+        ``batch_id=<writer>_<N>`` partition written by
+        ``runs.overwrite_partition``, so a batch replayed after a
+        mid-write failure rewrites its own partition instead of
+        appending duplicates (foreachBatch alone is only
+        at-least-once).  The writer prefix (``a`` here; ``b``/``c``/``s``
+        in stage B) keeps two queries that share a sink path from
+        clobbering each other's equal batch numbers."""
         from sagan_spark.pipeline.correlate import (
             _cond_shapes_by_bit,
             _funnel_bits,
@@ -723,13 +659,12 @@ class StreamingSaganEngine:
             assembled = assemble_alerts(batch_df, meta).persist()
             try:
                 for sink in sink_names:
-                    _idempotent_write(
+                    overwrite_partition(
                         SINK_BUILDERS[sink](
                             apply_sink_suppression(assembled, sink, suppress)
-                        ),
+                        ).withColumn("batch_id", F.lit(f"a_{batch_id}")),
                         f"{base_path}/{sink}",
-                        batch_id,
-                        writer_id="a",
+                        ["batch_id"],
                     )
                 all_sets = None
                 for sid, x, pos, bit_name, key, funnel in setters:
@@ -761,12 +696,10 @@ class StreamingSaganEngine:
                     )
                     all_sets = sets if all_sets is None else all_sets.unionByName(sets)
                 if all_sets is not None:
-                    _idempotent_write(
-                        all_sets,
+                    overwrite_partition(
+                        all_sets.withColumn("batch_id", F.lit(f"a_{batch_id}")),
                         f"{base_path}/xbit_sets",
-                        batch_id,
-                        extra_partition="set_bucket",
-                        writer_id="a",
+                        ["batch_id", "set_bucket"],
                     )
             finally:
                 assembled.unpersist()
@@ -787,7 +720,6 @@ class StreamingSaganEngine:
         base_path: str,
         checkpoint: str,
         sinks: list[str] | None = None,
-        trigger_available_now: bool = True,
     ):
         """Stage B of the chained pipeline: route xbit-CONDITION rules.
 
@@ -881,7 +813,7 @@ class StreamingSaganEngine:
             batch_df = batch_df.persist()
             min_chk = batch_df.agg(F.min(ts_seconds_d(F.col("ts")))).first()[0]
             sets_path = f"{base_path}/xbit_sets"
-            sets = _read_store_or_none(spark, sets_path)  # None: nothing staged yet
+            sets = read_parquet_or_none(spark, sets_path)  # None: nothing staged yet
             if sets is not None and min_chk is not None:
                 # partition-prune buckets no check in this batch can see
                 live_from = int((min_chk - max_expire) // bucket_secs)
@@ -1236,18 +1168,16 @@ class StreamingSaganEngine:
                     .cast("long")
                     .alias("set_bucket"),
                 )
-                _idempotent_write(
-                    fired_rows,
+                overwrite_partition(
+                    fired_rows.withColumn("batch_id", F.lit(f"c_{batch_id}")),
                     sets_path,
-                    batch_id,
-                    extra_partition="set_bucket",
-                    writer_id="c",
+                    ["batch_id", "set_bucket"],
                 )
                 if chain_corr_specs:
                     # persist the walk's machine snapshot for the next
                     # micro-batch (idempotent: a replayed batch N
                     # re-reads N-1's snapshot and rewrites its own)
-                    _idempotent_write(
+                    overwrite_partition(
                         walk_out.filter(F.col("kind") == "cstate").select(
                             "sid",
                             F.lit("").alias("corr_group"),
@@ -1255,10 +1185,10 @@ class StreamingSaganEngine:
                             F.col("bit_key").alias("mkey"),
                             F.col("seq").alias("cnt"),
                             F.col("expire").alias("utime"),
+                            F.lit(f"s_{batch_id}").alias("batch_id"),
                         ),
                         chain_state_path,
-                        batch_id,
-                        writer_id="s",
+                        ["batch_id"],
                     )
                     _prune_old_corr_snapshots(spark, chain_state_path, batch_id)
 
@@ -1343,13 +1273,13 @@ class StreamingSaganEngine:
                     )
                     .persist()
                 )
-                _idempotent_write(
+                overwrite_partition(
                     replayed.filter(F.col("kind") == "s").select(
-                        "sid", "corr_group", "machine", "mkey", "cnt", "utime"
+                        "sid", "corr_group", "machine", "mkey", "cnt", "utime",
+                        F.lit(f"s_{batch_id}").alias("batch_id"),
                     ),
                     state_path,
-                    batch_id,
-                    writer_id="s",
+                    ["batch_id"],
                 )
                 _prune_old_corr_snapshots(spark, state_path, batch_id)
                 flags = replayed.filter(F.col("kind") == "e").select(
@@ -1373,13 +1303,12 @@ class StreamingSaganEngine:
             ).persist()
             try:
                 for sink in sink_names:
-                    _idempotent_write(
+                    overwrite_partition(
                         SINK_BUILDERS[sink](
                             apply_sink_suppression(assembled, sink, suppress)
-                        ),
+                        ).withColumn("batch_id", F.lit(f"b_{batch_id}")),
                         f"{base_path}/{sink}",
-                        batch_id,
-                        writer_id="b",
+                        ["batch_id"],
                     )
             finally:
                 assembled.unpersist()
@@ -1403,16 +1332,15 @@ class StreamingSaganEngine:
                     min_chk - self._watermark_secs(),
                 )
 
-        writer = (
+        return (
             hits.withColumn("suppressed_after", F.lit(False))
             .withColumn("suppressed_threshold", F.lit(False))
             .writeStream.outputMode("append")
             .option("checkpointLocation", checkpoint)
             .foreachBatch(write_batch)
+            .trigger(availableNow=True)
+            .start()
         )
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
     def run_pipeline_with_xbits(
         self,

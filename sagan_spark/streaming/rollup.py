@@ -16,9 +16,9 @@ BIT-IDENTICAL to running the batch op over all events seen so far —
 the FULL-oracle property the streaming_rollup / streaming_actives
 gates pin against the events_rollup / events_actives oracles.
 
-Idempotent resume (the jobs/run_corpus ledger idiom): the writer uses
-dynamic partition overwrite on ``batch_id`` — when Structured
-Streaming replays a batch after a crash (foreachBatch is
+Idempotent resume (``runs.overwrite_partition``, the writer the jobs'
+ledgers use too): dynamic partition overwrite on ``batch_id`` — when
+Structured Streaming replays a batch after a crash (foreachBatch is
 at-least-once), the replay REWRITES the same partition instead of
 appending a duplicate, so the ledger never double-counts (pinned in
 tests/test_streaming_rollup.py by merging the same batch twice).
@@ -43,20 +43,7 @@ from sagan_spark.ops.rollup import (
     fine_rollup,
     merge_fine,
 )
-
-
-def _write_ledger_partition(partial: DataFrame, batch_id: int,
-                            ledger_dir: str) -> None:
-    """Write one batch's partial to ``ledger_dir/batch_id=N``,
-    overwriting ONLY that partition (dynamic overwrite) so a replayed
-    batch is idempotent."""
-    (
-        partial.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(ledger_dir)
-    )
+from sagan_spark.runs import overwrite_partition
 
 
 # ---------------------------------------------------------------------------
@@ -71,9 +58,10 @@ def merge_rollup_batch(batch_df: DataFrame, batch_id: int, ledger_dir: str,
     (ops/rollup.fine_rollup — map-side combining, a few rows per
     (key, bucket) regardless of batch size) lands in its own ledger
     partition."""
-    _write_ledger_partition(
-        fine_rollup(batch_df, base_sec, key_col, ts_col, value_col),
-        batch_id, ledger_dir,
+    overwrite_partition(
+        fine_rollup(batch_df, base_sec, key_col, ts_col, value_col)
+        .withColumn("batch_id", F.lit(int(batch_id))),
+        ledger_dir, ["batch_id"],
     )
 
 
@@ -94,8 +82,7 @@ def start_rollup_query(spark: SparkSession, input_dir: str, ledger_dir: str,
                        checkpoint: str, resolutions: Sequence[int] =
                        (60, 3600, 86400), key_col: str = "event_type",
                        ts_col: str = "ts", value_col: str = "value",
-                       max_files_per_trigger: int | None = None,
-                       trigger_available_now: bool = True):
+                       max_files_per_trigger: int | None = None):
     """File-source runner (the start_burst_query shape): stream an
     events parquet directory into the rollup ledger with checkpointed,
     idempotent resume.  ``max_files_per_trigger`` splits the drain
@@ -107,17 +94,16 @@ def start_rollup_query(spark: SparkSession, input_dir: str, ledger_dir: str,
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     events = reader.parquet(input_dir)
-    writer = (
+    return (
         events.writeStream.foreachBatch(
             lambda df, bid: merge_rollup_batch(
                 df, bid, ledger_dir, res[0], key_col, ts_col, value_col
             )
         )
         .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -130,8 +116,10 @@ def merge_actives_batch(batch_df: DataFrame, batch_id: int, ledger_dir: str,
     """foreachBatch body: this batch's distinct (day, key) pairs land
     in their own ledger partition (within-batch dedup here,
     cross-batch dedup at read — distinct is idempotent under union)."""
-    _write_ledger_partition(
-        daykeys(batch_df, key_col, ts_col), batch_id, ledger_dir
+    overwrite_partition(
+        daykeys(batch_df, key_col, ts_col)
+        .withColumn("batch_id", F.lit(int(batch_id))),
+        ledger_dir, ["batch_id"],
     )
 
 
@@ -149,8 +137,7 @@ def actives_from_ledger(spark: SparkSession, ledger_dir: str,
 def start_actives_query(spark: SparkSession, input_dir: str, ledger_dir: str,
                         checkpoint: str, key_col: str = "user_id",
                         ts_col: str = "ts",
-                        max_files_per_trigger: int | None = None,
-                        trigger_available_now: bool = True):
+                        max_files_per_trigger: int | None = None):
     """File-source runner for the actives ledger (start_rollup_query
     shape)."""
     schema = spark.read.parquet(input_dir).schema
@@ -158,17 +145,16 @@ def start_actives_query(spark: SparkSession, input_dir: str, ledger_dir: str,
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     events = reader.parquet(input_dir)
-    writer = (
+    return (
         events.writeStream.foreachBatch(
             lambda df, bid: merge_actives_batch(
                 df, bid, ledger_dir, key_col, ts_col
             )
         )
         .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -183,8 +169,10 @@ def merge_quantiles_batch(batch_df: DataFrame, batch_id: int,
     ledger partition."""
     from sagan_spark.ops.quantiles import value_hist
 
-    _write_ledger_partition(
-        value_hist(batch_df, key_col, value_col), batch_id, ledger_dir
+    overwrite_partition(
+        value_hist(batch_df, key_col, value_col)
+        .withColumn("batch_id", F.lit(int(batch_id))),
+        ledger_dir, ["batch_id"],
     )
 
 
@@ -207,8 +195,7 @@ def start_quantiles_query(spark: SparkSession, input_dir: str,
                           ledger_dir: str, checkpoint: str,
                           key_col: str = "event_type",
                           value_col: str = "value",
-                          max_files_per_trigger: int | None = None,
-                          trigger_available_now: bool = True):
+                          max_files_per_trigger: int | None = None):
     """File-source runner for the quantile ledger (start_rollup_query
     shape)."""
     schema = spark.read.parquet(input_dir).schema
@@ -216,14 +203,13 @@ def start_quantiles_query(spark: SparkSession, input_dir: str,
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     events = reader.parquet(input_dir)
-    writer = (
+    return (
         events.writeStream.foreachBatch(
             lambda df, bid: merge_quantiles_batch(
                 df, bid, ledger_dir, key_col, value_col
             )
         )
         .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -119,23 +119,19 @@ def sessionize_stream(events: DataFrame, gap_sec: int = 14400,
 
 
 def start_session_query(spark: SparkSession, input_dir: str, out_dir: str,
-                        checkpoint: str, gap_sec: int = 14400,
-                        schema: T.StructType | None = None,
-                        trigger_available_now: bool = True, **kw):
+                        checkpoint: str, gap_sec: int = 14400, **kw):
     """File-source convenience runner: stream an events parquet
     directory through :func:`sessionize_stream` into a parquet sink
     with checkpointed exactly-once resume (drop new files in
     ``input_dir`` and re-run to continue a stopped stream)."""
-    if schema is None:
-        schema = spark.read.parquet(input_dir).schema
+    schema = spark.read.parquet(input_dir).schema
     events = spark.readStream.schema(schema).parquet(input_dir)
     assigned = sessionize_stream(events, gap_sec=gap_sec, **kw)
-    writer = (
+    return (
         assigned.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint)
         .format("parquet")
         .option("path", out_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import sys
 
+import pytest
 from pyspark.sql import SparkSession
 
 
@@ -60,3 +61,25 @@ def test_run_batch_resume_guard(spark, pages_path, tmp_path, monkeypatch, capsys
     _run([a if a != "fixed01" else "fixed02" for a in argv], monkeypatch)
     assert spark.read.parquet(f"{out}/alerts_eve").count() == eve1
     assert spark.read.parquet(f"{metrics}/lineage").count() == 2 * lineage1
+
+
+def test_run_batch_unreadable_runs_table_raises(spark, pages_path, tmp_path, monkeypatch):
+    """An unreadable completion-marker table is an error, not "no marker
+    yet": swallowing it would silently re-run a job that already
+    completed.  The guard runs before the engine, so nothing is written."""
+    rules = tmp_path / "r.rules"
+    rules.write_text(
+        'alert any any any -> any any (msg:"pw"; content:"Failed password"; '
+        "sid:9700002; rev:1;)\n"
+    )
+    runs = tmp_path / "metrics" / "runs"
+    runs.mkdir(parents=True)
+    (runs / "part-00000.parquet").write_bytes(b"this is not a parquet file")
+    out = tmp_path / "sinks"
+    argv = [
+        "--input", pages_path, "--rules", str(rules), "--output", str(out),
+        "--metrics", str(tmp_path / "metrics"), "--run-id", "fixed03",
+    ]
+    with pytest.raises(Exception):
+        _run(argv, monkeypatch)
+    assert not out.exists()

@@ -124,13 +124,9 @@ def test_vars_conf_matches_vars_py():
     """fixtures/vars.conf (the --vars file spark-submit ships) must
     stay in sync with fixtures/vars.py (what tests/bench import)."""
     from fixtures.vars import VARIABLES
+    from sagan_spark.rules.parser import load_vars
 
-    parsed = {}
-    for line in (REPO / "fixtures" / "vars.conf").read_text().splitlines():
-        line = line.strip()
-        if line and not line.startswith("#") and "=" in line:
-            k, _, v = line.partition("=")
-            parsed[k.strip()] = v.strip()
+    parsed = load_vars(REPO / "fixtures" / "vars.conf")
     assert parsed == VARIABLES
 
 
